@@ -402,3 +402,24 @@ def test_near_dup_pairs_null_text_and_empty_corpus(spark):
     assert got == [(3, 4, 1.0)]
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert near_dup_pairs(empty, k=3, threshold=0.5).collect() == []
+
+
+def test_incremental_lsh_empty_first_batch(spark, tmp_path):
+    """An empty first batch (no registry yet) reports zeros instead of
+    failing on the observed count, and a later batch is admitted."""
+    from vptstools_spark.operators.dedup import incremental_lsh_dedup
+
+    reg = str(tmp_path / "reg")
+    a0, r0 = incremental_lsh_dedup(spark, reg, _ilsh_docs(spark, []))
+    assert r0 == {
+        "n_batch": 0,
+        "n_seen_ids": 0,
+        "n_candidate_pairs": 0,
+        "n_rejected": 0,
+        "n_admitted": 0,
+    }
+    assert a0.count() == 0
+    _, r1 = incremental_lsh_dedup(
+        spark, reg, _ilsh_docs(spark, [(1, "alpha beta gamma delta epsilon zeta")])
+    )
+    assert r1["n_batch"] == 1 and r1["n_admitted"] == 1

@@ -177,3 +177,139 @@ def test_odim_fleet_small_file_packing_and_e2e(spark, tmp_path):
     csvs = _glob.glob(os.path.join(out, "p_radar=syaaa", "p_date=*", "*.csv"))
     n_lines = sum(open(c).read().count("\n") for c in csvs)
     assert n_lines == 24 * 25 + len(csvs)  # rows + one header per file
+
+
+def _two_month_case(spark):
+    """Profiles and inventory for nosta 2023-02-27 (modified 2023-02-28),
+    nosta 2023-03-11 (two VPs) and bejab 2023-03-12 (both modified
+    2023-03-12)."""
+    cases = [
+        ("nosta", datetime.datetime(2023, 2, 27, 23, 15), datetime.datetime(2023, 2, 28, 1)),
+        ("nosta", datetime.datetime(2023, 3, 11, 23, 15), datetime.datetime(2023, 3, 12, 1)),
+        ("nosta", datetime.datetime(2023, 3, 11, 23, 25), datetime.datetime(2023, 3, 12, 1)),
+        ("bejab", datetime.datetime(2023, 3, 12, 0, 5), datetime.datetime(2023, 3, 12, 1)),
+    ]
+    recs, inv_rows = [], []
+    for radar, ts, modified in cases:
+        name = f"{radar}_vp_{ts:%Y%m%dT%H%M%S}Z_0xb.h5"
+        recs.append(
+            make_profile_record(
+                radar=radar, ts=ts, source_file=name, u=1.25, u_state=STATE_VALUE
+            )
+        )
+        inv_rows.append(
+            ("repo", f"baltrad/hdf5/{radar}/{ts:%Y/%m/%d}/{name}", 1, modified)
+        )
+    inventory = spark.createDataFrame(
+        inv_rows, "repo string, file string, size long, modified timestamp"
+    )
+    return profiles_from_records(spark, recs), inventory
+
+
+def _partition_files(root, store):
+    return sorted(glob.glob(os.path.join(root, store, "p_radar=*", "p_*=*", "*.csv*")))
+
+
+def test_incremental_run_reads_and_rewrites_only_affected_months(spark, tmp_path):
+    """A daily partition of another month is neither read nor rewritten; the
+    affected month's file is its daily bodies joined in order."""
+    profiles, inventory = _two_month_case(spark)
+    root = str(tmp_path)
+    # first run selects all three radar-days
+    incremental_run(
+        spark, inventory, profiles, root, 30, now=datetime.datetime(2023, 3, 13)
+    )
+    monthly_files = _partition_files(root, "monthly")
+    assert [os.path.dirname(os.path.relpath(p, root)) for p in monthly_files] == [
+        "monthly/p_radar=bejab/p_month=202303",
+        "monthly/p_radar=nosta/p_month=202302",
+        "monthly/p_radar=nosta/p_month=202303",
+    ]
+    feb_glob = os.path.join(root, "monthly", "p_radar=nosta", "p_month=202302", "*")
+    [feb] = glob.glob(feb_glob)
+    feb_mtime = os.stat(feb).st_mtime_ns
+    # an unreadable file in the February day: reading it would fail the run
+    feb_day = os.path.join(root, "daily", "p_radar=nosta", "p_date=20230227")
+    with open(os.path.join(feb_day, "part-corrupt.csv.gz"), "wb") as fh:
+        fh.write(b"not gzip")
+
+    days = incremental_run(
+        spark, inventory, profiles, root, 2, now=datetime.datetime(2023, 3, 13)
+    )
+    assert {r["directory"].split("/", 2)[2] for r in days.collect()} == {
+        "nosta/2023/03/11",
+        "bejab/2023/03/12",
+    }
+    assert glob.glob(feb_glob) == [feb]
+    assert os.stat(feb).st_mtime_ns == feb_mtime
+    for radar in ("nosta", "bejab"):
+        dailies = sorted(
+            glob.glob(os.path.join(root, "daily", f"p_radar={radar}", "p_date=202303*", "*.csv"))
+        )
+        texts = [open(f).read().splitlines(keepends=True) for f in dailies]
+        [gz] = glob.glob(
+            os.path.join(root, "monthly", f"p_radar={radar}", "p_month=202303", "*.csv.gz")
+        )
+        assert gzip.open(gz, "rt").read() == "".join(
+            texts[0][:1] + [ln for t in texts for ln in t[1:]]
+        )
+
+
+def test_incremental_run_empty_selection(spark, tmp_path):
+    profiles, inventory = _two_month_case(spark)
+    root = str(tmp_path)
+    days = incremental_run(
+        spark, inventory, profiles, root, 2, now=datetime.datetime(2024, 1, 1)
+    )
+    assert days.count() == 0
+    assert _partition_files(root, "daily") == []
+    assert _partition_files(root, "monthly") == []
+    assert os.path.exists(os.path.join(root, "vpts.resource.json"))
+
+
+def test_monthly_vpts_job_without_months_rebuilds_every_month(spark, tmp_path):
+    from vptstools_spark.operators.pipeline import daily_vpts_job, monthly_vpts_job
+
+    profiles, _ = _two_month_case(spark)
+    daily, monthly = str(tmp_path / "daily"), str(tmp_path / "monthly")
+    daily_vpts_job(
+        spark,
+        profiles,
+        [("nosta", "20230227"), ("nosta", "20230311"), ("bejab", "20230312")],
+        daily,
+    )
+    monthly_vpts_job(spark, daily, monthly, [])  # empty month list: no work
+    assert not os.path.exists(monthly)
+    monthly_vpts_job(spark, daily, monthly)
+    parts = sorted(
+        os.path.relpath(p, monthly)
+        for p in glob.glob(os.path.join(monthly, "p_radar=*", "p_month=*"))
+    )
+    assert parts == [
+        "p_radar=bejab/p_month=202303",
+        "p_radar=nosta/p_month=202302",
+        "p_radar=nosta/p_month=202303",
+    ]
+
+
+def test_incremental_run_leaves_session_overwrite_mode(spark, tmp_path):
+    """The partition-overwrite mode is set per write: the session's conf is
+    unchanged, and a partition outside the selection survives even when the
+    session default is static (which would truncate the store)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    profiles, inventory = _two_month_case(spark)
+    root = str(tmp_path)
+    other = os.path.join(root, "daily", "p_radar=zzzzz", "p_date=20230301", "part-0.csv")
+    os.makedirs(os.path.dirname(other))
+    open(other, "w").close()
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        incremental_run(
+            spark, inventory, profiles, root, 2, now=datetime.datetime(2023, 3, 13)
+        )
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
+    assert os.path.exists(other)
+    assert len(_partition_files(root, "daily")) == 3

@@ -37,6 +37,7 @@ import click
 from vptstools_spark.functions.paths import with_parsed_inventory
 from vptstools_spark.operators.inventory import coverage, handle_manifest
 from vptstools_spark.operators.pipeline import (
+    collect_radar_days,
     daily_vpts_job,
     monthly_vpts_job,
     write_descriptor,
@@ -124,46 +125,39 @@ def run(
             df_cov.orderBy("directory"), os.path.join(destination, "coverage.csv")
         )
 
-    day_rows = days.collect()  # radar-days are driver-sized (the work list)
-    click.echo(f"Create {len(day_rows)} daily VPTS files.")
-    if not day_rows:
+    selected = collect_radar_days(days)  # driver-sized: the work list
+    click.echo(f"Create {len(selected)} daily VPTS files.")
+    if not selected:
         click.echo("Finished VPTS update procedure.")
         return {"days": [], "daily": 0, "monthly": 0}
 
     from vptstools_spark.sources.odim import read_vp_files
 
-    day_dirs = [r["directory"] for r in day_rows]
+    day_dirs = [d.directory for d in selected]
     profiles = read_vp_files(
         spark, [os.path.join(h5_root, d, "*.h5") for d in day_dirs]
     )
-    keys = []
-    for d in day_dirs:
-        source, _ftype, radar, yyyy, mm, dd = d.split("/")
-        keys.append((source, radar, yyyy, mm, dd, f"{yyyy}{mm}{dd}"))
-    days_keys = spark.createDataFrame(
-        [(k[1], k[5]) for k in keys], "radar_code string, date string"
-    )
     daily_store = os.path.join(destination, "_daily_store")
     monthly_store = os.path.join(destination, "_monthly_store")
-    daily_vpts_job(spark, profiles, days_keys, daily_store)
+    daily_vpts_job(spark, profiles, [(d.radar, d.date) for d in selected], daily_store)
 
     n_daily = 0
-    for source, radar, yyyy, mm, dd, ymd in keys:
+    for d in selected:
         target = os.path.join(
-            destination, source, "daily", radar, yyyy, f"{radar}_vpts_{ymd}.csv"
+            destination, d.source, "daily", d.radar, d.yyyy, f"{d.radar}_vpts_{d.date}.csv"
         )
         click.echo(f"Create daily VPTS file {os.path.relpath(target, destination)}.")
         if _publish(
-            os.path.join(daily_store, f"p_radar={radar}", f"p_date={ymd}", "*.csv"),
+            os.path.join(daily_store, f"p_radar={d.radar}", f"p_date={d.date}", "*.csv"),
             target,
         ):
             n_daily += 1
     click.echo("Finished creating daily VPTS files.")
 
-    months = sorted({(s, r, y, m) for s, r, y, m, _d, _ymd in keys})
+    months = sorted({(d.source, d.radar, d.yyyy, d.mm) for d in selected})
     click.echo(f"Create {len(months)} monthly VPTS files.")
     monthly_vpts_job(
-        spark, daily_store, monthly_store, [f"{y}{m}" for _s, _r, y, m in months]
+        spark, daily_store, monthly_store, sorted({d.month for d in selected})
     )
     n_monthly = 0
     for source, radar, yyyy, mm in months:

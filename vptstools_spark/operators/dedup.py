@@ -877,6 +877,7 @@ def incremental_lsh_dedup(
     {"n_batch", "n_candidate_pairs", "n_rejected", "n_admitted"}."""
     import os as _os
 
+    from py4j.protocol import Py4JJavaError
     from pyspark import StorageLevel
 
     from vptstools_spark.plans.timetravel import (
@@ -1007,8 +1008,14 @@ def incremental_lsh_dedup(
         hashed_all = hashed_new
     if n_after_replay is None:
         # no-registry path: the pair count above materialized the shingle
-        # cache over the observed batch, so the submitted count is ready
-        n_submitted = int(obs.get["n"])
+        # cache over the observed batch, so the submitted count is ready —
+        # unless the optimizer proved the batch empty and dropped the
+        # observation: its metrics row then has no schema and cannot be
+        # read, and a plain count answers instead
+        try:
+            n_submitted = int(obs.get["n"])
+        except Py4JJavaError:
+            n_submitted = batch.count()
         n_after_replay = n_submitted
     verified = jaccard_verify_hashed(hashed_all, pairs, threshold)
     # min-id dominance: the larger side of any verified pair is rejected

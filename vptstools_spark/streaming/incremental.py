@@ -61,32 +61,13 @@ def incremental_vpts_sink(
     """availableNow → foreachBatch → whole-partition overwrite of affected
     radar-days. Exactly-once by idempotence: re-processing a batch rewrites
     the same day partitions with the same content."""
+    from vptstools_spark.operators.pipeline import write_vpts_partitions
     from vptstools_spark.operators.vpts import to_vpts_table
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        table = to_vpts_table(batch_df, vpts_csv_version)
-        out = table.withColumn("p_radar", F.col("radar")).withColumn(
-            "p_date", F.regexp_replace(F.substring("datetime", 1, 10), "-", "")
-        )
-        (
-            out.repartition("p_radar", "p_date")
-            # partition cols lead the sort: the partitioned-file writer
-            # re-sorts by them alone otherwise, destroying the data order
-            .sortWithinPartitions(
-                "p_radar", "p_date", "radar", "datetime",
-                F.col("height").cast("int"), "source_file",
-            )
-            .write.mode("overwrite")
-            .partitionBy("p_radar", "p_date")
-            .option("header", "true")
-            # same tri-state text rendering as the batch daily job — the
-            # two paths must produce byte-identical artifacts
-            .option("emptyValue", "")
-            .option("nullValue", "")
-            .csv(output_path)
-        )
+        # the batch daily job's writer: the two paths produce byte-identical
+        # partitions
+        write_vpts_partitions(to_vpts_table(batch_df, vpts_csv_version), output_path)
 
     return (
         profiles_stream.writeStream.foreachBatch(process)
